@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -10,24 +9,9 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     // optional 3rd arg (local use): comma-separated query names to dump
     val only: Option[Set[String]] = args.lift(2).map(_.split(',').toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // events.parquet carries TIMESTAMP(NANOS) (see graft.sources.Tables)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // dump timestamps as us (never INT96) so pyarrow/DuckDB agree
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      // Lint promotion (r4 verdict item 8): a whole-stage method
-      // janino rejects (>64 KB) must FAIL that query's dump — the
-      // driver's correctness compare then flags it — instead of
-      // silently running interpreted (a 5–20× regression at 100 TB).
-      .config("spark.sql.codegen.fallback", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the graded bench conf (util.BenchConfs); its codegen.fallback=false
+    // makes a whole-stage method janino rejects fail that query's dump
+    val spark = graft.util.BenchConfs.session()
     new java.io.File(outDir).mkdirs()
     // Dump queries a few at a time: Spark's scheduler interleaves the
     // independent jobs (planning/IO of one overlaps compute of

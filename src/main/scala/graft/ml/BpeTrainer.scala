@@ -142,7 +142,7 @@ object BpeTrainer {
     * corpus scan + shuffle — before returning, and [[mergesDF]] /
     * [[encodeWords]] inherit that. Merely CONSTRUCTING a DataFrame
     * through these entry points runs Spark jobs (plan inspection
-    * included — ExplainSpec/ExplainAudit pay the training cost to
+    * included — ExplainSpec pays the training cost to
     * look at the plan). Acceptable under the model-table contract —
     * the result is a driver-sized model, same as KMeansLite/
     * ProductQuantizer codebooks — but callers composing lazy plans

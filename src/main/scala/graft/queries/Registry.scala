@@ -722,12 +722,25 @@ object Registry {
     "q_ndcg", "q_ewma", "q_naive_bayes", "q_kmeans",
     "q_global_median", "q_retention")
 
-  def bench30: Seq[BoundQuery] = {
+  def bench30: Seq[BoundQuery] = resolve("bench30", bench30Names)
+
+  /** tpch10: the ten TPC-H completions, timed by Bench as a tracked,
+    * non-headline subtotal graded against its own same-session DuckDB
+    * row in BASELINE.md. Frozen like bench30. */
+  val tpch10Names: Seq[String] = Seq(
+    "q6_forecast_revenue", "q8_market_share", "q10_returned_items",
+    "q13_order_distribution", "q14_promo_effect", "q15_top_supplier",
+    "q17_small_qty_revenue", "q18_large_orders", "q19_discounted_revenue",
+    "q22_dormant_customers")
+
+  def tpch10: Seq[BoundQuery] = resolve("tpch10", tpch10Names)
+
+  private def resolve(set: String, names: Seq[String]): Seq[BoundQuery] = {
     val byName = allQueries.map(q => q.name -> q).toMap
-    val missing = bench30Names.filterNot(byName.contains)
+    val missing = names.filterNot(byName.contains)
     require(missing.isEmpty,
-      s"bench30 lost queries (renamed/removed?): ${missing.mkString(", ")}")
-    bench30Names.map(byName)
+      s"$set lost queries (renamed/removed?): ${missing.mkString(", ")}")
+    names.map(byName)
   }
 
   /** Flagship for the driver smoke check. */

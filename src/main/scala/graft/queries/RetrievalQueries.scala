@@ -233,7 +233,7 @@ object RetrievalQueries {
     // stages leaves it at ~7 s) but the DRIVER re-walking the ~3^5-
     // copy analyzed tree on every action: caches substitute after
     // analysis, so each count() still paid seconds of Catalyst time
-    // (round-6 PlanTime split: build 5.0 s / exec-on-warm-cache
+    // (round-6 build/exec split: build 5.0 s / exec-on-warm-cache
     // 6.4 s, all driver). localCheckpoint TRUNCATES the lineage to a
     // LogicalRDD per stage — plan size is constant in the stage
     // count — and the checkpoint is LAZY: the shared LogicalRDDs

@@ -131,7 +131,7 @@ object Tables {
   }
 
   /** Parquet-scan bytes → in-memory-columnar cached bytes, MEASURED
-    * (tools.CacheFootprint on the sf0.1 fixtures, round 9): the cache
+    * (cached size over scan stats per table, sf0.1 fixtures): the cache
     * re-encodes snappy parquet into Spark's compressed columnar
     * batches, which land anywhere from 0.32× (region — parquet footer
     * overhead dominates tiny files) to 3.32× (lineitem — low-entropy

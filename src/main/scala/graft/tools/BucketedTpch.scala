@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.Bench
 
 /** Plain-vs-bucketed layout A/B for the sf100 shuffle-join headliners
@@ -33,25 +32,11 @@ object BucketedTpch {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val skipWrite = args.lift(1).contains("skipWrite")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val warehouse = sys.env.getOrElse("SPARK_GRAFT_WAREHOUSE",
       "/tmp/graft_bucketed_warehouse")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // Bench's confs, so the plain side reproduces the graded numbers
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "2m")
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        (cpus.toInt * 8).toString)
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .config("spark.sql.warehouse.dir", warehouse)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val buckets = cpus.toInt
+    // Bench's session, so the plain side reproduces the graded numbers
+    val spark = graft.util.BenchConfs.session(warehouse = Some(warehouse))
+    val buckets = graft.util.BenchConfs.cpus
 
     def la(): String = Bench.loadavg()
     val laStart = la()

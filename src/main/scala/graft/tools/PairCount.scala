@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, count, lit, max}
 
 /** Output-volume meter for the near-dup family (round-5 verdict item
@@ -38,28 +38,7 @@ object PairCount {
       if (args.length >= 2 && args(0).startsWith("q"))
         (args(0).split(',').toSeq, args.drop(1).toSeq)
       else (Seq("q_lsh_cosine_pairs"), args.toSeq)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // wide initial shuffle + AQE coalesce — Bench's round-7 scale
-      // conf, so PairCount's scale grades measure the shipped setup
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "2m")
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        (cpus.toInt * 8).toString)
-      .config("spark.ui.enabled", "false")
-    // SPARK_GRAFT_CONF="k=v;k2=v2" — same ad-hoc override hook as Bench,
-    // for conf A/B during scale profiling
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(';').foreach { kv =>
-      kv.split("=", 2) match {
-        case Array(k, v)                => builder.config(k.trim, v.trim)
-        case Array(x) if x.trim.isEmpty => ()
-        case _ => sys.error(s"bad SPARK_GRAFT_CONF segment (want k=v): '$kv'")
-      }
-    })
-    val s = builder.getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+    val s = graft.util.BenchConfs.session()
     // warm the table registry per directory BEFORE timing, exactly
     // like Bench's service mode: ScaleUp fixtures are single-file
     // tables, and without the size-gated spread-before-persist an

@@ -24,9 +24,7 @@ class BucketingSpec extends AnyFunSuite {
         col("l_orderkey") === col("o_orderkey"))
       .groupBy("o_orderstatus").count()
     // disable broadcast so the join strategy itself is exercised
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val plan = joined.queryExecution.executedPlan.toString
       val joinSection = plan.split("HashAggregate").last
       assert(joinSection.contains("SortMergeJoin") || plan.contains("SortMergeJoin"),
@@ -45,7 +43,6 @@ class BucketingSpec extends AnyFunSuite {
       val got = joined.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       assert(got == expected)
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
       spark.sql("DROP TABLE IF EXISTS orders_b")
       spark.sql("DROP TABLE IF EXISTS lineitem_b")
     }

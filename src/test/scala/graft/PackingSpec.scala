@@ -256,15 +256,33 @@ class PackingSpec extends AnyFunSuite {
   }
 
   test("global median matches a local exact sort at sfTiny") {
+    // second input: the same documents with one NULL length, which the
+    // oracle's ORDER BY n_chars ranks LAST
+    val docs = graft.sources.Tables.documents(spark, sfTiny)
+    val nullDir = java.nio.file.Files.createTempDirectory("median_null").toString
+    val nulled = docs.agg(min("doc_id")).head().get(0)
+    docs.withColumn("n_chars", when(col("doc_id") === lit(nulled), lit(null))
+        .otherwise(col("n_chars")).cast(docs.schema("n_chars").dataType))
+      .write.parquet(s"$nullDir/documents.parquet")
+    def long(v: Any): Option[Long] = Option(v).map(_.asInstanceOf[Number].longValue)
+    Seq(sfTiny, nullDir).foreach { dir =>
+      val row = Registry.queries("q_global_median")(spark, dir).head()
+      val vals = graft.sources.Tables.documents(spark, dir)
+        .select("n_chars").collect().map(r => long(r.get(0)))
+        .sortBy(v => (v.isEmpty, v.getOrElse(0L)))
+      val n = vals.length.toLong
+      val ranks = Seq("p25" -> (n + 3) / 4, "median" -> (n + 1) / 2,
+        "p75" -> (3 * n + 3) / 4)
+      assert(row.getAs[Long]("n_docs") == n)
+      ranks.foreach { case (c, k) =>
+        assert(long(row.get(row.fieldIndex(c))) == vals((k - 1).toInt), s"$c at $dir")
+      }
+      // NULLs first would read the value one rank lower: that must
+      // differ for some pick, or the NULL input proves nothing
+      if (dir == nullDir)
+        assert(ranks.exists { case (_, k) => vals((k - 2).toInt) != vals((k - 1).toInt) })
+    }
     val row = Registry.queries("q_global_median")(spark, sfTiny).head()
-    val vals = graft.sources.Tables.documents(spark, sfTiny)
-      .select("n_chars").collect().map(_.getLong(0)).sorted
-    val n = vals.length
-    def pick(k: Long) = vals((k - 1).toInt)
-    assert(row.getAs[Long]("n_docs") == n)
-    assert(row.getAs[Long]("p25") == pick((n + 3) / 4))
-    assert(row.getAs[Long]("median") == pick((n + 1) / 2))
-    assert(row.getAs[Long]("p75") == pick((3L * n + 3) / 4))
     assert(row.getAs[Long]("p25") <= row.getAs[Long]("median") &&
       row.getAs[Long]("median") <= row.getAs[Long]("p75"))
   }

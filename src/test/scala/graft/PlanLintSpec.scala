@@ -21,8 +21,7 @@ class PlanLintSpec extends AnyFunSuite {
   private val whitelist: Map[String, String] = Map.empty
 
   test("no bound query plans a CartesianProduct") {
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    withConf("spark.sql.adaptive.enabled" -> "false") {
       val offenders = Registry.allQueries.flatMap { q =>
         val plan =
           try q.run(spark, sfTiny).queryExecution.executedPlan
@@ -36,6 +35,6 @@ class PlanLintSpec extends AnyFunSuite {
           s"or add an equi key): ${unexplained.toSeq.sorted.map(n => s"$n(${offenders(n)})").mkString(", ")}")
       val stale = whitelist.keySet -- offenders.keySet
       assert(stale.isEmpty, s"stale cartesian whitelist entries: ${stale.toSeq.sorted.mkString(", ")}")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    }
   }
 }

@@ -69,11 +69,10 @@ class PlansSpec extends AnyFunSuite {
   test("RangeJoinRewrite maxBucketsPerRow=0 sends everything to the fallback, still correct") {
     val expected = pairs(points.join(bands, betweenCond))
     withRule {
-      spark.conf.set("spark.graft.rangeJoin.maxBucketsPerRow", "0")
-      try {
+      withConf("spark.graft.rangeJoin.maxBucketsPerRow" -> "0") {
         val rewritten = points.join(bands, betweenCond)
         assert(pairs(rewritten) == expected)
-      } finally spark.conf.unset("spark.graft.rangeJoin.maxBucketsPerRow")
+      }
     }
   }
 
@@ -89,11 +88,10 @@ class PlansSpec extends AnyFunSuite {
 
   test("RangeJoinRewrite respects the enabled flag") {
     withRule {
-      spark.conf.set("spark.graft.rangeJoin.enabled", "false")
-      try {
+      withConf("spark.graft.rangeJoin.enabled" -> "false") {
         val q = points.join(bands, betweenCond)
         assert(q.queryExecution.executedPlan.toString.contains("NestedLoop"))
-      } finally spark.conf.set("spark.graft.rangeJoin.enabled", "true")
+      }
     }
   }
 
@@ -132,13 +130,12 @@ class PlansSpec extends AnyFunSuite {
     assert(expected.nonEmpty && expected.values.exists(_ > 1),
       "fixture must contain duplicate pairs to test multiplicity")
     withIvRule {
-      spark.conf.set("spark.graft.intervalJoin.bucketWidth", "1000.0")
-      try {
+      withConf("spark.graft.intervalJoin.bucketWidth" -> "1000.0") {
         val rewritten = ivA.join(ivB, overlapCond)
         val plan = rewritten.queryExecution.executedPlan.toString
         assert(plan.contains("HashJoin") || plan.contains("SortMergeJoin"), plan)
         assert(ivPairs(rewritten) == expected)
-      } finally spark.conf.unset("spark.graft.intervalJoin.bucketWidth")
+      }
     }
   }
 
@@ -147,13 +144,9 @@ class PlansSpec extends AnyFunSuite {
       lit(999L).as("b_id"), lit(-1.0e9).as("b_s"), lit(1.0e9).as("b_e")))
     val expected = ivPairs(ivA.join(huge, overlapCond))
     withIvRule {
-      spark.conf.set("spark.graft.intervalJoin.bucketWidth", "1000.0")
-      spark.conf.set("spark.graft.intervalJoin.maxBucketsPerRow", "100")
-      try {
+      withConf("spark.graft.intervalJoin.bucketWidth" -> "1000.0",
+               "spark.graft.intervalJoin.maxBucketsPerRow" -> "100") {
         assert(ivPairs(ivA.join(huge, overlapCond)) == expected)
-      } finally {
-        spark.conf.unset("spark.graft.intervalJoin.bucketWidth")
-        spark.conf.unset("spark.graft.intervalJoin.maxBucketsPerRow")
       }
     }
   }
@@ -177,10 +170,9 @@ class PlansSpec extends AnyFunSuite {
     assert(expected.keys.exists(_._2 == 800L),
       "fixture must produce matches involving reversed right rows")
     withIvRule {
-      spark.conf.set("spark.graft.intervalJoin.bucketWidth", "1000.0")
-      try {
+      withConf("spark.graft.intervalJoin.bucketWidth" -> "1000.0") {
         assert(ivPairs(revA.join(revB, overlapCond)) == expected)
-      } finally spark.conf.unset("spark.graft.intervalJoin.bucketWidth")
+      }
     }
   }
 
@@ -191,13 +183,12 @@ class PlansSpec extends AnyFunSuite {
       (col("id") * 700L).as("a_s"), (col("id") * 700L + 2500L).as("a_e"))
     val expected = ivPairs(la.join(ivB, overlapCond))
     withIvRule {
-      spark.conf.set("spark.graft.intervalJoin.bucketWidth", "1000.0")
-      try {
+      withConf("spark.graft.intervalJoin.bucketWidth" -> "1000.0") {
         val rewritten = la.join(ivB, overlapCond)
         val plan = rewritten.queryExecution.executedPlan.toString
         assert(plan.contains("HashJoin") || plan.contains("SortMergeJoin"), plan)
         assert(ivPairs(rewritten) == expected)
-      } finally spark.conf.unset("spark.graft.intervalJoin.bucketWidth")
+      }
     }
   }
 
@@ -214,11 +205,10 @@ class PlansSpec extends AnyFunSuite {
 
   test("IntervalJoinRewrite respects the enabled flag") {
     withIvRule {
-      spark.conf.set("spark.graft.intervalJoin.enabled", "false")
-      try {
+      withConf("spark.graft.intervalJoin.enabled" -> "false") {
         val q = ivA.join(ivB, overlapCond)
         assert(q.queryExecution.executedPlan.toString.contains("NestedLoop"))
-      } finally spark.conf.set("spark.graft.intervalJoin.enabled", "true")
+      }
     }
   }
 
@@ -233,8 +223,7 @@ class PlansSpec extends AnyFunSuite {
         .groupBy(col("user_id"), expr("unix_date(CAST(ts AS DATE))").as("dd"))
         .agg(min(unix_micros(col("ts"))).as("s"),
           max(unix_micros(col("ts"))).as("e"))
-      spark.conf.set("spark.graft.intervalJoin.bucketWidth", "21600000000.0")
-      try {
+      withConf("spark.graft.intervalJoin.bucketWidth" -> "21600000000.0") {
         val a = spans("click").select(col("user_id").as("u1"),
           col("s").as("a_s"), col("e").as("a_e"))
         val b = spans("error").select(col("user_id").as("u2"),
@@ -242,7 +231,7 @@ class PlansSpec extends AnyFunSuite {
         val joined = a.join(b, col("u1") === col("u2") &&
           col("a_s") <= col("b_e") && col("b_s") <= col("a_e"))
         assert(joined.count() == expected)
-      } finally spark.conf.unset("spark.graft.intervalJoin.bucketWidth")
+      }
     }
   }
 }

@@ -44,8 +44,11 @@ class PropertiesSpec extends AnyFunSuite {
   test("aggregates are partition-invariant (the Num discipline, proven)") {
     // same queries, radically different parallelism -> identical bytes.
     // This is the property that makes results reproducible on a
-    // 1000-executor cluster, not just against the oracle.
-    def snapshot(): Seq[Seq[String]] =
+    // 1000-executor cluster, not just against the oracle. The session
+    // runs the bench conf; the two extremes below bracket it: one
+    // post-shuffle partition with no broadcasts, and 64 uncoalesced
+    // partitions with skew splitting on.
+    val names =
       Seq("q1_pricing_summary", "q_correlation", "q_value_stats", "q_ewma",
         // round-3 waves: hash-family dedup, micro-nat entropy, µs-grid
         // event analytics, two-phase cumsum selection, centroid margins
@@ -56,17 +59,33 @@ class PropertiesSpec extends AnyFunSuite {
         // BH step-up, EB shrinkage, LP communities, exact group ranks
         "q_pca", "q_bq_topk", "q_fdr", "q_eb_smooth", "q_label_prop",
         "q_group_quantiles", "q_chao1", "q_dedup_report")
-        .map { n =>
-          graft.queries.Registry.queries(n)(spark, sfTiny)
-            .collect().map(_.toSeq.map(String.valueOf).mkString("|")).toSeq.sorted
-        }
-    val before = spark.conf.get("spark.sql.shuffle.partitions")
-    val a = snapshot()
-    spark.conf.set("spark.sql.shuffle.partitions", "7")
-    try {
-      val b = snapshot()
-      assert(a == b)
-    } finally spark.conf.set("spark.sql.shuffle.partitions", before)
+    def snapshot(): Seq[Seq[String]] = names.map { n =>
+      graft.queries.Registry.queries(n)(spark, sfTiny)
+        .collect().map(_.toSeq.map(String.valueOf).mkString("|")).toSeq.sorted
+    }
+    // proof that a conf really changed the width: the post-shuffle
+    // partition count of a probe aggregate, read off its final plan
+    def probeWidth(): Int = graft.sources.Tables.lineitem(spark, sfTiny)
+      .groupBy("l_orderkey").count().rdd.getNumPartitions
+    val narrow = Seq(
+      "spark.sql.shuffle.partitions" -> "1",
+      "spark.sql.adaptive.coalescePartitions.initialPartitionNum" -> "1",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
+    // with coalescing off, AQE ignores initialPartitionNum and shuffles
+    // at spark.sql.shuffle.partitions, so both are set
+    val wide = Seq(
+      "spark.sql.shuffle.partitions" -> "64",
+      "spark.sql.adaptive.coalescePartitions.initialPartitionNum" -> "64",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
+      "spark.sql.adaptive.skewJoin.enabled" -> "true")
+    val default = snapshot()
+    for ((name, confs, width) <- Seq(("narrow", narrow, 1), ("wide", wide, 64)))
+      withConf(confs: _*) {
+        assert(probeWidth() == width, s"$name conf did not run at $width partitions")
+        val differ = names.zip(snapshot().zip(default))
+          .collect { case (n, (got, want)) if got != want => n }
+        assert(differ.isEmpty, s"$name conf changes the results of $differ")
+      }
   }
 
   test("SimHashPoly matches the scalar vote model for any ascii token list") {

@@ -34,6 +34,13 @@ class RegistrySpec extends AnyFunSuite {
     // ...and every bound query must be documented
     val undocumented = bound -- documented
     assert(undocumented.isEmpty, s"bound queries missing from SURVEY: $undocumented")
+    // the README's bound-query count is pinned to the Registry too
+    val readme = scala.io.Source.fromFile("README.md", "UTF-8").mkString
+    val counts = "Registry: (\\d+) bound queries".r
+      .findAllMatchIn(readme).map(_.group(1).toInt).toSeq
+    assert(counts.nonEmpty, "README states no bound-query count")
+    assert(counts.forall(_ == Registry.queries.size),
+      s"README says $counts bound queries; the Registry binds ${Registry.queries.size}")
   }
 
   test("q1 aggregates match a hand check at sf0.001") {
@@ -62,14 +69,19 @@ class RegistrySpec extends AnyFunSuite {
   }
 
   test("bench30 is a frozen, resolvable, oracle-backed 30-query set") {
-    val b30 = Registry.bench30
-    assert(b30.length == 30)
-    assert(b30.map(_.name).distinct.length == 30)
-    // regression visibility needs a DuckDB twin for every member
-    val noOracle = b30.filter(_.oracle.isEmpty).map(_.name)
-    assert(noOracle.isEmpty, s"bench30 members without oracle: $noOracle")
-    // none of the 12 cross-round headliners may be double-counted here
-    val overlap = b30.map(_.name).toSet intersect Registry.headlines.map(_.name).toSet
-    assert(overlap.isEmpty, s"bench30 overlaps headliners: $overlap")
+    // tpch10, Bench's other frozen subtotal, is pinned the same way
+    Seq("bench30" -> (Registry.bench30, 30), "tpch10" -> (Registry.tpch10, 10))
+      .foreach { case (set, (qs, size)) =>
+        assert(qs.length == size, s"$set size")
+        assert(qs.map(_.name).distinct.length == size, s"$set has duplicates")
+        // regression visibility needs a DuckDB twin for every member
+        val noOracle = qs.filter(_.oracle.isEmpty).map(_.name)
+        assert(noOracle.isEmpty, s"$set members without oracle: $noOracle")
+        // none of the 12 cross-round headliners may be double-counted here
+        val overlap = qs.map(_.name).toSet intersect Registry.headlines.map(_.name).toSet
+        assert(overlap.isEmpty, s"$set overlaps headliners: $overlap")
+      }
+    assert(Registry.bench30Names.toSet.intersect(Registry.tpch10Names.toSet).isEmpty,
+      "bench30 and tpch10 share members")
   }
 }

@@ -28,9 +28,7 @@ class RuntimeFilterSpec extends AnyFunSuite {
       // feature itself (not its cost model) is what's under test
       "spark.sql.optimizer.dynamicPartitionPruning.useStats" -> "false",
       "spark.sql.optimizer.dynamicPartitionPruning.fallbackFilterRatio" -> "100.0")
-    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+    withConf(confs: _*) {
       val fact = spark.read.parquet(s"$dir/fact")
       val sources = fact.select("source").distinct()
         .collect().map(_.getString(0)).sorted
@@ -76,9 +74,6 @@ class RuntimeFilterSpec extends AnyFunSuite {
       val partsRead = factScan.metrics("numPartitions").value
       assert(partsRead == 1L,
         s"fact scan read $partsRead partitions, expected 1 of ${sources.length}")
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 
@@ -95,9 +90,7 @@ class RuntimeFilterSpec extends AnyFunSuite {
       "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
       // force a shuffle join so the filter has a shuffle to save
       "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+    withConf(confs: _*) {
       val fact = spark.read.parquet(s"$dir/fact")
       // the selective predicate must exist as a Filter node at
       // optimization time — that is what marks the creation side
@@ -108,9 +101,6 @@ class RuntimeFilterSpec extends AnyFunSuite {
       assert(plan.contains("might_contain"),
         s"no runtime bloom filter in:\n$plan")
       assert(q.count() == 50L * 40L) // 50 surviving keys × 40 fact rows each
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 }

@@ -34,9 +34,7 @@ class SkewSpec extends AnyFunSuite {
       // coalescing can merge the tiny uniform partitions back together,
       // which is fine; skew split must still fire on the hot one
       "spark.sql.adaptive.coalescePartitions.enabled" -> "true")
-    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+    withConf(confs: _*) {
       val (left, right) = skewedFacts
       // the join must be TERMINAL: a keyed aggregate downstream would
       // make AQE decline the skew split, since splitting breaks the
@@ -54,9 +52,6 @@ class SkewSpec extends AnyFunSuite {
       val finalPlan = adaptive.get.executedPlan.toString
       assert(finalPlan.contains("skew=true"),
         s"AQE did not mark the join skewed:\n$finalPlan")
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 

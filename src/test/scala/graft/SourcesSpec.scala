@@ -174,10 +174,9 @@ class SourcesSpec extends AnyFunSuite {
     val usable = Runtime.getRuntime.maxMemory() - (300L << 20)
     assert(dflt == (usable * (0.6 * 0.5)).toLong,
       "default budget = storage region: (heap - 300MB) x 0.6 x 0.5")
-    try {
-      spark.conf.set("spark.graft.warm.heapFraction", "0.1")
+    withConf("spark.graft.warm.heapFraction" -> "0.1") {
       assert(Tables.warmBudgetBytes(spark) == (usable * 0.1).toLong)
-    } finally spark.conf.unset("spark.graft.warm.heapFraction")
+    }
   }
 
   test("warm() tolerates a partial fixture directory (round-9 ScaleUp `tables` arg)") {

@@ -392,11 +392,8 @@ class StreamingSpec extends AnyFunSuite {
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sfTiny/events.parquet"),
       dir.resolve("events.parquet"))
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withConf("spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
       val q = EventStreams.userRunningCounts(spark, dir.toString)
         .writeStream.outputMode("update")
         .format("memory").queryName("rocks_out")
@@ -411,9 +408,6 @@ class StreamingSpec extends AnyFunSuite {
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
         assert(streamed == batch)
       } finally q.stop()
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
     }
   }
 
@@ -427,8 +421,6 @@ class StreamingSpec extends AnyFunSuite {
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sfTiny/events.parquet"),
       src.resolve("events.parquet"))
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     def runOnce(): Unit = {
       val q = EventStreams.raw(spark, src.toString)
         .writeStream.outputMode("append")
@@ -440,7 +432,7 @@ class StreamingSpec extends AnyFunSuite {
         .start()
       try q.processAllAvailable() finally q.stop()
     }
-    try {
+    withConf("spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
       runOnce()
       runOnce() // fresh query, no checkpoint: the whole input replays
       val got = spark.read.parquet(out)
@@ -449,9 +441,6 @@ class StreamingSpec extends AnyFunSuite {
         .groupBy("event_type").count()
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       assert(got == want, s"replay duplicated or lost rows: $got vs $want")
-    } finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
     }
   }
 
@@ -476,8 +465,6 @@ class StreamingSpec extends AnyFunSuite {
     }
     val out = java.nio.file.Files.createTempDirectory("events_fi_out").toString + "/agg"
     val ckpt = java.nio.file.Files.createTempDirectory("events_fi_ck").toString
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     val crashOnce = new java.util.concurrent.atomic.AtomicBoolean(true)
     var sawCrash = false
     def start() = spark.readStream
@@ -495,7 +482,7 @@ class StreamingSpec extends AnyFunSuite {
         ()
       }
       .start()
-    try {
+    withConf("spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
       val q1 = start()
       try q1.processAllAvailable()
       catch { case _: Throwable => () }
@@ -514,9 +501,6 @@ class StreamingSpec extends AnyFunSuite {
         .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
       assert(got == want,
         s"redelivered batch duplicated or lost rows: ${got.size} vs ${want.size}")
-    } finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
     }
   }
 

@@ -2,24 +2,12 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Shared local session for specs (one JVM-wide session; Test/fork). */
+/** Shared local session for specs (one JVM-wide session; Test/fork),
+  * built by the same recipe as Bench and Verify. */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // codegen lint: a whole-stage method janino rejects (>64 KB)
-      // normally falls back to interpreted with only a log line — a
-      // silent 5-20x regression at scale. In tests, make it THROW so
-      // any operator that outgrows codegen fails its spec instead.
-      .config("spark.sql.codegen.fallback", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+    // the graded conf (util.BenchConfs), at 4 cores whatever the box
+    val s = graft.util.BenchConfs.session(4)
     // Fixture-window noise control (round-5 verdict item 8): spec
     // fixtures and oracle replays execute the whitelisted bounded-input
     // windows thousands of times, and WindowExec's per-execution "No
@@ -51,4 +39,16 @@ object TestSpark {
     s
   }
   val sfTiny = "/root/testdata/sf0.001"
+
+  /** Runs `body` with the given session confs set, then restores each
+    * key's previous value, or unsets a key that had none. */
+  def withConf[T](kvs: (String, String)*)(body: => T): T = {
+    val saved = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
+    }
+  }
 }

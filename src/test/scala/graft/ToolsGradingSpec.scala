@@ -91,13 +91,11 @@ class ToolsGradingSpec extends AnyFunSuite {
     assert(disarmed eq slim,
       "over the cap the frame passes through unhinted (AQE fallback)")
     // a session that disabled broadcast joins never gets a library hint
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    TestSpark.withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val respectful = util.Hints.gatedBroadcast(slim, proxy, selectivity = 1.0)
       assert(respectful eq slim,
         "a disabled session threshold must pass through unhinted")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   test("Hints default cap tracks the session's autoBroadcastJoinThreshold") {
@@ -118,20 +116,13 @@ class ToolsGradingSpec extends AnyFunSuite {
     // broadcast joins must not get library-forced broadcasts; the
     // 128 MB class boundary is the sf100 q8/q10 A/B — see
     // Hints.DefaultCapBytes)
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-      assert(util.Hints.defaultCap(spark) == 2L * 10485760L)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1g")
-      assert(util.Hints.defaultCap(spark) == util.Hints.DefaultCapBytes,
-        "the 128 MB ceiling binds when 2×threshold exceeds it")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      assert(util.Hints.defaultCap(spark) == 0L,
-        "a disabled threshold disarms the gate entirely")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "0")
-      assert(util.Hints.defaultCap(spark) == 0L,
-        "a zero threshold disarms the gate entirely")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    def capAt(threshold: String): Long = TestSpark.withConf(
+      "spark.sql.autoBroadcastJoinThreshold" -> threshold)(util.Hints.defaultCap(spark))
+    assert(capAt("10485760") == 2L * 10485760L)
+    assert(capAt("1g") == util.Hints.DefaultCapBytes,
+      "the 128 MB ceiling binds when 2×threshold exceeds it")
+    assert(capAt("-1") == 0L, "a disabled threshold disarms the gate entirely")
+    assert(capAt("0") == 0L, "a zero threshold disarms the gate entirely")
   }
 
   test("Hints.gatedBroadcast disarms when the proxy's stats are unknown") {

@@ -21,8 +21,7 @@ class WindowLintSpec extends AnyFunSuite {
   import TestSpark._
 
   test("every unpartitioned window sits on a documented bounded input") {
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    withConf("spark.sql.adaptive.enabled" -> "false") {
       val offenders = Registry.allQueries.flatMap { q =>
         val plan =
           try q.run(spark, sfTiny).queryExecution.executedPlan
@@ -38,6 +37,6 @@ class WindowLintSpec extends AnyFunSuite {
       assert(stale.isEmpty,
         s"whitelist entries whose plans no longer have unpartitioned windows " +
           s"(remove them): ${stale.toSeq.sorted.mkString(", ")}")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    }
   }
 }

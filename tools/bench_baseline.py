@@ -19,7 +19,7 @@ sf = _pos[0] if len(_pos) > 0 else "/root/testdata/sf0.1"
 out = _pos[1] if len(_pos) > 1 else "/tmp/verify_out"
 runs = int(_pos[2]) if len(_pos) > 2 else 3
 
-# keep in sync with Registry.headlines (ExplainAudit prints the list)
+# keep in sync with Registry.headlines
 HEADLINERS = [
     "q1_pricing_summary", "q3_shipping_priority", "q5_local_volume",
     "q_owner_leaderboard", "q_top_brands_per_year", "q_dedup_exact",
